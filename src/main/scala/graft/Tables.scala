@@ -153,20 +153,28 @@ object Tables {
     if (plannedParallelism(df) < want) df.repartition(want, keys: _*) else df
   }
 
-  /** The frame's planned scan parallelism, read from the physical plan's
-    * `FileSourceScanExec` split count — NOT from `df.rdd`, which builds a
-    * whole second QueryExecution (a DeserializeToObject wrapper over the
-    * plan) plus the full executed-plan RDD chain, all thrown away after
-    * the read (r21 ADVICE). Every spread call site passes a bare table
-    * scan, so the scan's split count IS the frame's parallelism; the
-    * `toRdd` fallback (same planning, no deserializer re-plan) covers any
-    * future non-scan caller. Plan-only either way: no job runs. */
+  /** The frame's planned parallelism. For a bare table scan (exactly one
+    * `FileSourceScanExec` and no Exchange above it) that is the scan's
+    * planned split count — read from the physical plan, NOT from
+    * `df.rdd`, which builds a whole second QueryExecution (a
+    * DeserializeToObject wrapper over the plan) plus the full
+    * executed-plan RDD chain, all thrown away after the read (r21
+    * ADVICE). Every spread call site passes such a scan. Any other shape
+    * (a repartition, a join of two scans) makes the split count the
+    * wrong answer and takes the `toRdd` fallback (same planning, no
+    * deserializer re-plan); under AQE that runs the plan's shuffle map
+    * stages, so only the bare-scan path is plan-only. The walk reads the
+    * EXECUTED plan: exchanges that a distribution requirement adds (an
+    * aggregate's, a join's) only appear there. Under AQE a plan with an
+    * exchange is wrapped in a leaf that hides its scans, so the walk
+    * finds none and takes the fallback. */
   private def plannedParallelism(df: DataFrame): Int = {
     import org.apache.spark.sql.execution.FileSourceScanExec
-    val scans = df.queryExecution.sparkPlan.collect {
-      case f: FileSourceScanExec => f.inputRDD.getNumPartitions
-    }
-    if (scans.nonEmpty) scans.sum
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val plan = df.queryExecution.executedPlan
+    val scans = plan.collect { case f: FileSourceScanExec => f }
+    val shuffled = plan.find(_.isInstanceOf[Exchange]).isDefined
+    if (scans.size == 1 && !shuffled) scans.head.inputRDD.getNumPartitions
     else df.queryExecution.toRdd.getNumPartitions
   }
 

@@ -115,7 +115,10 @@ object ConnectedComponents {
     cur = rightsize(cur, curFp._1)
     var rounds = 0
     var converged = curFp._1 == 0
-    while (!converged && rounds < maxIter) {
+    // Two rounds per iteration: the next iteration runs only if both of
+    // its rounds fit, so an odd maxIter allows maxIter - 1 rounds, never
+    // maxIter + 1.
+    while (!converged && rounds + 2 <= maxIter) {
       // TWO alternating rounds per fingerprint job (r22): the loop was
       // scheduling-latency-bound at small edge volumes (one fingerprint
       // job per round), and the convergence argument only needs SOME
@@ -151,7 +154,8 @@ object ConnectedComponents {
     }
     if (!converged)
       throw new IllegalStateException(
-        s"connected components did not converge in $maxIter alternating rounds")
+        s"connected components did not converge within maxIter = $maxIter " +
+          s"alternating rounds (ran $rounds, two per iteration)")
     assertStarForest(cur)
     // Stars are (member, component-min); the min labels itself. The final
     // checkpointed frame stays referenced by the returned labels, so its

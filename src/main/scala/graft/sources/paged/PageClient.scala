@@ -27,39 +27,40 @@ trait PageClient {
 
 /** File-backed client: each line is `id|name|popularity|market`. Stands in
   * for the remote endpoint in this no-egress environment; everything above
-  * it (partition planning, pushdown, retry) is production-shaped. */
+  * it (partition planning, pushdown, retry) is production-shaped. The file
+  * is read and split once per client, on first use: a partition reader
+  * builds one client and fetches a run of pages through it. */
 class LineFileClient(path: String) extends PageClient {
 
   private val columns = Array("id", "name", "popularity", "market")
 
-  private def readAll(): Seq[Array[String]] = {
+  private lazy val all: Vector[Array[String]] = {
     val src = Source.fromFile(path)
     // split with limit -1: a trailing empty field (empty market) must
     // survive, or downstream index-3 access dies on a 3-element array
-    try src.getLines().map(_.split("\\|", -1)).toList
+    try src.getLines().map(_.split("\\|", -1)).toVector
     finally src.close()
   }
 
-  override def total(market: Option[String] = None): Long = (market match {
-    case Some(m) => readAll().count(_(3) == m)
-    case None => readAll().size
-  }).toLong
+  private def rows(market: Option[String]): Vector[Array[String]] = market match {
+    case Some(m) => all.filter(_(3) == m)
+    case None => all
+  }
+
+  override def total(market: Option[String] = None): Long =
+    rows(market).size.toLong
 
   override def fetchPage(offset: Long, limit: Int, market: Option[String],
                          fields: Array[String]): Seq[Array[String]] = {
-    val filtered = market match {
-      case Some(m) => readAll().filter(_(3) == m)
-      case None => readAll()
-    }
     val idx = fields.map(f => columns.indexOf(f))
-    filtered.slice(offset.toInt, offset.toInt + limit).map(r => idx.map(r))
+    rows(market).slice(offset.toInt, offset.toInt + limit).map(r => idx.map(r))
   }
 
   override def fetchByIds(ids: Seq[String],
                           fields: Array[String]): Seq[Array[String]] = {
     val want = ids.toSet
     val idx = fields.map(f => columns.indexOf(f))
-    readAll().filter(r => want(r(0))).map(r => idx.map(r))
+    all.filter(r => want(r(0))).map(r => idx.map(r))
   }
 }
 

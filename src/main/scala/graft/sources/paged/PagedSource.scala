@@ -4,6 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -16,10 +17,15 @@ import org.apache.spark.unsafe.types.UTF8String
 /** DataSourceV2 connector modeling the reference's REST extraction layer
   * (SURVEY.md §2.1) with Spark-native scan planning:
   *
-  *   - **S4 paginated scan**: one `InputPartition` per page range
-  *     (offset/limit), so a 10^9-row endpoint scans as parallel pages
-  *     across executors instead of the reference's sequential driver loop
-  *     (01_TestingPy/Spotify_API4.py:327-356).
+  *   - **S4 paginated scan**: each `InputPartition` is a [[PageRange]],
+  *     a run of consecutive pages, so a 10^9-row endpoint scans as
+  *     parallel page runs across executors instead of the reference's
+  *     sequential driver loop (01_TestingPy/Spotify_API4.py:327-356).
+  *     Partitions are sized to the cluster, not to the wire format: the
+  *     scan plans `max(defaultParallelism, ceil(rows / MaxRowsPerPartition))`
+  *     partitions (never more than there are pages; see
+  *     [[PagedSource.planRanges]]). Every request is still one
+  *     `pageSize` page, so retries and re-auth stay per page.
   *   - **F3 predicate pushdown**: `market = 'X'` equality filters reach
   *     the client as request parameters (the reference auto-injects
   *     `market='ID'`, Spotify_API3.py:56-61); pushed filters are removed
@@ -193,6 +199,30 @@ object PagedSource {
     StructField("name", StringType),
     StructField("popularity", IntegerType),
     StructField("market", StringType)))
+
+  /** The most rows one planned partition reads. */
+  val MaxRowsPerPartition = 10000L
+
+  /** Groups `pages` consecutive pages of `pageSize` rows, out of an
+    * endpoint reporting `total` rows, into runs, one per partition,
+    * spread evenly (run lengths differ by at most one).
+    *
+    * The rule sizes the partition count to the cluster:
+    * `max(parallelism, ceil(pages / (MaxRowsPerPartition / pageSize)))`,
+    * which is `max(parallelism, ceil(rows / MaxRowsPerPartition))` for a
+    * page size that divides [[MaxRowsPerPartition]], capped at the page
+    * count. The cap is on rows per partition, not on the partition
+    * count, so a 10^9-row endpoint still fans out across executors. */
+  def planRanges(pages: Long, pageSize: Int, total: Long,
+                 parallelism: Int): Array[PageRange] = {
+    val maxPages = math.max(1L, MaxRowsPerPartition / pageSize)
+    val n = math.min(pages, math.max(parallelism.toLong, (pages + maxPages - 1) / maxPages))
+    val (base, extra) = (pages / n, pages % n)
+    Array.tabulate(n.toInt) { i =>
+      val first = i * base + math.min(i.toLong, extra)
+      PageRange(first * pageSize, (base + (if (i < extra) 1 else 0)).toInt, pageSize, total)
+    }
+  }
 }
 
 final class PagedTable(endpoint: Endpoint, pageSize: Int) extends Table with SupportsRead {
@@ -252,11 +282,12 @@ final class PagedScanBuilder(endpoint: Endpoint, pageSize: Int)
       s"PushedLimit=${pushedLimit.getOrElse("none")})"
 
     override def planInputPartitions(): Array[InputPartition] = {
-      // One partition per page range. Row count comes from the endpoint's
-      // total (a REST API returns `total`; the file client counts lines) —
-      // a single tiny driver-side call, same as the reference's first page
-      // fetch, made through the retry/re-auth wrapper like every other
-      // call (a transient failure at plan time shouldn't kill the scan).
+      // Runs of consecutive pages (see PagedSource.planRanges). Row count
+      // comes from the endpoint's total (a REST API returns `total`; the
+      // file client counts lines) — a single tiny driver-side call, same
+      // as the reference's first page fetch, made through the retry/
+      // re-auth wrapper like every other call (a transient failure at
+      // plan time shouldn't kill the scan).
       // With a pushed filter the FILTERED total plans the pages — the
       // endpoint paginates the filtered result, so the unfiltered count
       // would schedule mostly-empty page tasks. A pushed limit then caps
@@ -267,8 +298,9 @@ final class PagedScanBuilder(endpoint: Endpoint, pageSize: Int)
       val pages = pushedLimit
         .map(l => math.min(allPages, math.max(1L, (l.toLong + pageSize - 1) / pageSize)))
         .getOrElse(allPages)
-      (0L until pages).map(p =>
-        PagePartition(p * pageSize, pageSize): InputPartition).toArray
+      val parallelism = SparkSession.active.sparkContext.defaultParallelism
+      PagedSource.planRanges(pages, pageSize, total, parallelism)
+        .toArray[InputPartition]
     }
 
     override def createReaderFactory(): PartitionReaderFactory = {
@@ -278,31 +310,52 @@ final class PagedScanBuilder(endpoint: Endpoint, pageSize: Int)
   }
 }
 
-/** A page of the remote scan: rows [offset, offset+limit). */
-final case class PagePartition(offset: Long, limit: Int) extends InputPartition
+/** A run of `pages` consecutive pages of the remote scan, the first at
+  * row `firstOffset`: rows [firstOffset, firstOffset + pages * pageSize).
+  * `total` is the row count the endpoint reported when the scan was
+  * planned; it tells the reader how many rows each page must hold. */
+final case class PageRange(firstOffset: Long, pages: Int, pageSize: Int, total: Long)
+    extends InputPartition
 
 final case class PagedReaderFactory(endpoint: Endpoint, fields: Array[String],
                                     market: Option[String])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val page = partition.asInstanceOf[PagePartition]
+    val range = partition.asInstanceOf[PageRange]
     // endpoint.client() on the executor: shared per-JVM auth + throttled
     // transport, one cached token per JVM rather than one per page reader
-    new PagedReader(endpoint.client(), page, fields, market)
+    new PagedReader(endpoint.client(), range, fields, market)
   }
 }
 
-/** Reads one page through the client, emitting only the pruned fields. */
-final class PagedReader(client: PageClient, page: PagePartition,
+/** Reads a run of pages through the client, emitting only the pruned
+  * fields. Pages are fetched lazily, one `fetchPage` each, so a fault on
+  * one page replays that page only and at most one page is held in
+  * memory. Every page of the run is read. A page with fewer rows than
+  * the planned total puts there (a 2xx reply without `items`, an API
+  * that caps `limit` below `pageSize`, rows deleted since planning)
+  * fails the task: read on, it would silently drop the rows it lacks. */
+final class PagedReader(client: PageClient, range: PageRange,
                         fields: Array[String], market: Option[String])
     extends PartitionReader[InternalRow] {
 
-  private val rows: Iterator[Array[String]] =
-    client.fetchPage(page.offset, page.limit, market, fields).iterator
+  private var rows: Iterator[Array[String]] = Iterator.empty
+  private var fetched = 0
 
   private var current: Array[String] = _
 
   override def next(): Boolean = {
+    while (!rows.hasNext && fetched < range.pages) {
+      val offset = range.firstOffset + fetched.toLong * range.pageSize
+      val page = client.fetchPage(offset, range.pageSize, market, fields)
+      val want = math.max(0L, math.min(range.pageSize.toLong, range.total - offset))
+      if (page.length < want)
+        throw new IllegalStateException(
+          s"page at offset $offset returned ${page.length} rows, expected $want " +
+            s"(pageSize ${range.pageSize}, endpoint total ${range.total} at planning)")
+      fetched += 1
+      rows = page.iterator
+    }
     if (rows.hasNext) { current = rows.next(); true } else false
   }
 

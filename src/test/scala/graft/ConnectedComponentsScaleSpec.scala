@@ -67,6 +67,20 @@ class ConnectedComponentsScaleSpec extends SparkSpec {
     assert((0 until 10000).forall(k => got(100001L + 2 * k) == 100000L + 2 * k))
   }
 
+  test("an odd maxIter bounds the rounds run: never maxIter + 1") {
+    // Rounds come two per iteration. A chain needing r rounds must fail
+    // at maxIter = r - 1 (after r - 2 rounds) instead of running r, and
+    // converge in the same r rounds under maxIter = r + 1.
+    val chain = (0L until 15L).map(i => (i, i + 1)).toDF("src", "dst")
+    val (_, r) = ConnectedComponents.runWithRounds(chain)
+    assert(r >= 2 && r % 2 == 0, s"rounds come in pairs, got $r")
+    val e = intercept[IllegalStateException](
+      ConnectedComponents.runWithRounds(chain, maxIter = r - 1))
+    assert(e.getMessage.contains(s"maxIter = ${r - 1}") &&
+      e.getMessage.contains(s"ran ${r - 2}"), e.getMessage)
+    assert(ConnectedComponents.runWithRounds(chain, maxIter = r + 1)._2 === r)
+  }
+
   test("the star-forest safety net fires on both violation modes and passes a real star forest") {
     // A safety check nothing can trip is dead code: prove the net
     // catches (1) a chain — a node on both sides of an edge — and

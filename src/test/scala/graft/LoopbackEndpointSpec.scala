@@ -27,6 +27,36 @@ class LoopbackEndpointSpec extends SparkSpec {
     }
   }
 
+  test("401/429/503 replies on pages inside a run still land exactly the fixture rows") {
+    LoopbackApi.withApi { api =>
+      // 10 pages of 10 in four runs of two or three pages (local[4])
+      val rdd = spark.read.format("graft.sources.paged.PagedSource")
+        .option("url", api.base).option("pageSize", 10).load().rdd
+      assert(rdd.getNumPartitions === 4) // planned: the total probe is done
+      val probes = api.queries.size
+      // queued after planning, so the replies land on page fetches
+      Seq((401, None), (429, Some(0L)), (503, None)).foreach(api.failures.add)
+      val got = rdd.collect().map(r => (r.getString(0), r.getString(1),
+        r.getInt(2), r.getString(3))).sortBy(_._1)
+      assert(got.toSeq === LoopbackApi.fixtureRows.sortBy(_._1))
+      assert(api.failures.isEmpty, "every queued fault was served")
+      val pages = api.queries.drop(probes)
+      assert(pages.size === 10 + 3, "ten page fetches plus one replay per fault")
+      assert(pages.distinct.size === 10, "a replay repeats its own page's query")
+    }
+  }
+
+  test("a 10^9-row total plans ceil(rows / MaxRowsPerPartition) runs and fetches no page") {
+    LoopbackApi.withMangledApi(_.replace("\"total\":100,", "\"total\":1000000000,")) { api =>
+      val df = spark.read.format("graft.sources.paged.PagedSource")
+        .option("url", api.base).option("pageSize", 50).load()
+      assert(df.rdd.getNumPartitions ===
+        math.ceil(1e9 / PagedSource.MaxRowsPerPartition).toInt)
+      assert(api.queries.nonEmpty && api.queries.forall(_.split("&").contains("limit=1")),
+        s"planning must only probe the total: ${api.queries}")
+    }
+  }
+
   test("filter + projection pushdown arrive at the endpoint as request params") {
     LoopbackApi.withApi { api =>
       import org.apache.spark.sql.functions.col

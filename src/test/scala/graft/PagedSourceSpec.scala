@@ -25,12 +25,109 @@ class PagedSourceSpec extends SparkSpec {
     spark.read.format("graft.sources.paged.PagedSource")
       .option("path", path).option("pageSize", pageSize).load()
 
+  private def drain(reader: PagedReader): Seq[String] =
+    Iterator.continually(reader).takeWhile(_.next()).map(_.get().getString(0)).toSeq
+
   test("scans all pages in parallel partitions") {
     withDataFile(95) { path =>
       val df = read(path, pageSize = 10)
       assert(df.count() === 95)
-      assert(df.rdd.getNumPartitions === 10) // ceil(95/10) page ranges
+      // ceil(95/10) = 10 pages grouped into one run per core (local[4])
+      assert(df.rdd.getNumPartitions === 4)
       assert(df.select("id").as[String].collect().toSet.size === 95)
+    }
+  }
+
+  test("grouped runs at the core-count boundaries land every row once") {
+    assert(spark.sparkContext.defaultParallelism === 4,
+      "the boundary counts below assume local[4]")
+    // 3 pages (fewer than cores), 8 (2 x cores), 9 (2 x cores + 1)
+    for ((rows, parts) <- Seq(25 -> 3, 80 -> 4, 90 -> 4)) withDataFile(rows) { path =>
+      val df = read(path, pageSize = 10)
+      assert(df.rdd.getNumPartitions === parts, s"$rows rows")
+      val ids = df.select("id").as[String].collect()
+      assert(ids.length === rows && ids.toSet.size === rows, s"$rows rows")
+    }
+  }
+
+  test("planRanges covers every page once, evenly, under the row cap") {
+    def check(pages: Long, pageSize: Int, par: Int, parts: Long): Unit = {
+      val rs = PagedSource.planRanges(pages, pageSize, pages * pageSize, par)
+      assert(rs.length === parts, s"pages=$pages pageSize=$pageSize")
+      assert(rs.map(_.pages.toLong).sum === pages)
+      assert(rs.head.firstOffset === 0L)
+      rs.sliding(2).foreach {
+        case Array(a, b) => assert(b.firstOffset === a.firstOffset + a.pages.toLong * pageSize)
+        case _ => ()
+      }
+      assert(rs.map(_.pages).max - rs.map(_.pages).min <= 1, "runs differ by at most a page")
+      assert(rs.forall(_.pages <= math.max(1L, PagedSource.MaxRowsPerPartition / pageSize)),
+        "runs stay under the cap")
+    }
+    check(3, 10, 4, 3)
+    check(8, 10, 4, 4)
+    check(9, 10, 4, 4)
+    check(250, 50, 4, 4)
+    check(1000, 50, 4, 5) // 50,000 rows: the row cap, not the cores, sets the count
+    check(2, 20000, 4, 2) // a page above the cap is still one run
+  }
+
+  test("a pushed limit that ends inside a run returns exactly the limit") {
+    withDataFile(95) { path =>
+      // ceil(37/5) = 8 pages in four runs of two; row 37 is inside the
+      // last run's second page
+      val df = read(path, pageSize = 5).limit(37)
+      assert(df.queryExecution.executedPlan.toString.contains("PushedLimit=37"))
+      val scan = df.queryExecution.executedPlan.collectFirst {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+      }.get
+      assert(scan.inputRDD.getNumPartitions === 4)
+      assert(df.count() === 37)
+      assert(df.select("id").as[String].collect().toSet.size === 37)
+    }
+  }
+
+  test("a run of pages is fetched one page at a time; a fault replays its page only") {
+    withDataFile(30) { path =>
+      val fetches = scala.collection.mutable.Buffer.empty[Long]
+      var faults = List[() => Nothing](
+        () => throw new UnauthorizedException,
+        () => throw new RateLimitedException(Some(0L), "page 1"),
+        () => throw new java.io.IOException("503"))
+      val inner = new LineFileClient(path) {
+        override def fetchPage(o: Long, l: Int, m: Option[String],
+                               f: Array[String]): Seq[Array[String]] = {
+          fetches += o
+          if (o == 10 && faults.nonEmpty) { val f0 = faults.head; faults = faults.tail; f0() }
+          super.fetchPage(o, l, m, f)
+        }
+      }
+      val reader = new PagedReader(new RetryingClient(inner, sleeper = _ => ()),
+        PageRange(0, 3, 10, 30), Array("id"), None)
+      assert(drain(reader) === (1 to 30).map(i => f"a$i%03d"))
+      // page 1 is replayed three times; every other page is fetched once
+      assert(fetches.toSeq === Seq(0L, 10L, 10L, 10L, 10L, 20L))
+    }
+  }
+
+  test("a short page inside the data fails the run instead of dropping rows") {
+    withDataFile(30) { path =>
+      def reader(serve: (Long, Int) => Seq[Array[String]]) = new PagedReader(
+        new LineFileClient(path) {
+          override def fetchPage(o: Long, l: Int, m: Option[String],
+                                 f: Array[String]): Seq[Array[String]] = serve(o, l)
+        }, PageRange(0, 3, 10, 30), Array("id"), None)
+      def rows(o: Long, l: Int) = (o + 1 to math.min(o + l, 30L)).map(i => Array(f"a$i%03d"))
+      // a 2xx reply without `items` on page 1
+      val empty = intercept[IllegalStateException](
+        drain(reader((o, l) => if (o == 10) Seq.empty else rows(o, l))))
+      assert(empty.getMessage.contains("offset 10 returned 0 rows, expected 10"), empty.getMessage)
+      // an API that caps limit below pageSize
+      val capped = intercept[IllegalStateException](drain(reader((o, l) => rows(o, 5))))
+      assert(capped.getMessage.contains("offset 0 returned 5 rows, expected 10"), capped.getMessage)
+      // the last page of the data may be short
+      assert(drain(new PagedReader(new LineFileClient(path), PageRange(20, 2, 8, 30),
+        Array("id"), None)) === (21 to 30).map(i => f"a$i%03d"))
     }
   }
 

@@ -202,6 +202,21 @@ class TablesSpec extends SparkSpec with BeforeAndAfterAll {
     assert(Tables.spread(wide, col("id")) eq wide)
   }
 
+  test("spread reads a repartition above a wide scan as the repartition's width") {
+    // A wide scan narrowed by an Exchange is starved at the Exchange's
+    // width, not the scan's: only a bare scan's split count is the
+    // frame's parallelism.
+    val want = spark.sparkContext.defaultParallelism
+    val dir = tmp("spread-exchange")
+    spark.range(400).toDF("id").repartition(want).write.parquet(s"$dir/t.parquet")
+    val scan = spark.read.parquet(s"$dir/t.parquet")
+    assert(Tables.spread(scan, col("id")) eq scan, "a wide bare scan passes through")
+    val narrowed = scan.repartition(2)
+    val sp = Tables.spread(narrowed, col("id"))
+    assert(sp ne narrowed, "a 2-wide frame must be spread")
+    assert(sp.rdd.getNumPartitions === want)
+  }
+
   test("an unrecognized ts type fails loudly instead of mis-deriving ts_us") {
     val dir = tmp("bad")
     spark.range(1).select(lit("2020-01-01").as("ts"), lit(7L).as("user_id"))
