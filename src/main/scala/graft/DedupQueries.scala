@@ -498,11 +498,13 @@ object DedupQueries {
     // history runs before touching the plan. Since round 13 the
     // history lines carry load_start/load_end (loadavg + steal ticks)
     // — read those FIRST: a steal delta or an out-of-profile loadavg
-    // is one-run evidence, and `Bench <dir> --repeat 2` runs the
-    // two-run protocol as a single command when covariates are clean.
-    // Since round 14 tools/bench_history.py applies the thresholds
-    // itself: a trailing `!` marks a run as non-comparable, so start
-    // triage from the rendered table, not from remembered numbers.
+    // is one-run evidence. `Bench <dir> --repeat 2` appends two lines
+    // in one command, but the second is a warm same-JVM repeat; the
+    // two-fresh-runs protocol needs two invocations.
+    // tools/bench_history.py applies the thresholds and derives the
+    // per-query suspects and lead verdicts from the history: a
+    // trailing `!` marks a run as non-comparable, so start triage
+    // from the rendered table, not from remembered numbers.
     QueryDef("d58_blocked_composed",
       (s, dir) => bigramPairs(s, dir, Seq("lang")).orderBy("doc_a", "doc_b"),
       Some(duckBigramPairsSql(Seq("lang")))),

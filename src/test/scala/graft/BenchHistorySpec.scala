@@ -96,7 +96,7 @@ class BenchHistorySpec extends AnyFunSuite {
     val cov0 = Bench.covariateJson(Some((1.0, 2.0, 3.0)), Some(7L))
     val cov1 = Bench.covariateJson(Some((4.0, 5.0, 6.0)), Some(9L))
     val parsed = JsonMethods.parse(
-      "{" + Bench.lineHead("both", 32, "/root/testdata/sf0.1", cov0, cov1) + "}")
+      "{" + Bench.lineHead(32, "/root/testdata/sf0.1", cov0, cov1) + "}")
     assert(parsed \ "cpus" === JInt(32))
     assert(parsed \ "metric" === JString("total"))
     assert(parsed \ "mode" === JString("both"))
@@ -111,58 +111,31 @@ class BenchHistorySpec extends AnyFunSuite {
     assert(parsed \ "load_end" \ "steal_ticks" === JInt(9))
     // a dir with JSON structural chars must round-trip, not corrupt the line
     val hostile = JsonMethods.parse(
-      "{" + Bench.lineHead("ordered", 8, "/tmp/we\"ird\\dir", cov0, cov1) + "}")
+      "{" + Bench.lineHead(8, "/tmp/we\"ird\\dir", cov0, cov1) + "}")
     assert(hostile \ "cpus" === JInt(8))
     assert(hostile \ "sf" === JString("/tmp/we\"ird\\dir"))
     assert(hostile \ "sf_num" === JNull)
   }
 
   test("stealDeltaOf differences the endpoints, None unless both readable") {
-    assert(Bench.stealDeltaOf(Some(100L), Some(142L)) === Some(42L))
-    assert(Bench.stealDeltaOf(None, Some(142L)) === None)
-    assert(Bench.stealDeltaOf(Some(100L), None) === None)
-  }
-
-  test("nonComparable mirrors the history tool's thresholds") {
-    val quiet = Some((1.0, 1.0, 1.0))
-    // clean on every covariate -> comparable
-    assert(Bench.nonComparable(32, quiet, quiet, Some(0L)) === Some(false))
-    // steal bar is strict >, matching SUSPECT_STEAL_DELTA's selftest pin
-    assert(Bench.nonComparable(32, quiet, quiet,
-      Some(Bench.SuspectStealDelta)) === Some(false))
-    assert(Bench.nonComparable(32, quiet, quiet,
-      Some(Bench.SuspectStealDelta + 1)) === Some(true))
-    // 1-minute loadavg above the worker count at EITHER endpoint flags
-    assert(Bench.nonComparable(32, Some((33.0, 0.0, 0.0)), quiet,
-      Some(0L)) === Some(true))
-    assert(Bench.nonComparable(32, quiet, Some((32.5, 0.0, 0.0)),
-      Some(0L)) === Some(true))
-    assert(Bench.nonComparable(32, Some((32.0, 0.0, 0.0)), quiet,
-      Some(0L)) === Some(false)) // > not >=
-    // partial covariates: the readable ones adjudicate
-    assert(Bench.nonComparable(32, None, None, Some(9999L)) === Some(true))
-    assert(Bench.nonComparable(32, Some((40.0, 0.0, 0.0)), None, None)
-      === Some(true))
-    // nothing readable -> None (unknown is not clean)
-    assert(Bench.nonComparable(32, None, None, None) === None)
-  }
-
-  test("verdictFields serialize tail-most as number/boolean, null when unknown") {
-    assert(JsonMethods.parse("{" + Bench.verdictFields(Some(42L), Some(false)) + "}")
-      === JsonMethods.parse("""{"steal_delta":42,"noncomparable":false}"""))
-    assert(JsonMethods.parse("{" + Bench.verdictFields(None, None) + "}")
-      === JsonMethods.parse("""{"steal_delta":null,"noncomparable":null}"""))
-    // the composed line shape: verdict fields AFTER value, so any tail
-    // truncation that keeps the headline keeps its comparability flag
-    val line = s"""{${Bench.lineHead("both", 32, "/d/sf1",
-      Bench.covariateJson(None, Some(0L)),
-      Bench.covariateJson(None, Some(500L)))},"value":1.5,${
-      Bench.verdictFields(Some(500L), Some(true))}}"""
-    val tail = line.substring(line.indexOf("\"value\""))
-    assert(tail === """"value":1.5,"steal_delta":500,"noncomparable":true}""")
-    val parsed = JsonMethods.parse(line)
-    assert(parsed \ "steal_delta" === JInt(500))
-    assert(parsed \ "noncomparable" === JBool(true))
+    // the bench records only the endpoint ticks; the history tool's
+    // steal_delta differences them, so feed it lines as lineHead writes them
+    def head(s0: Option[Long], s1: Option[Long]): String =
+      "{" + Bench.lineHead(32, "/root/testdata/sf0.1",
+        Bench.covariateJson(Some((1.0, 1.0, 1.0)), s0),
+        Bench.covariateJson(Some((1.0, 1.0, 1.0)), s1)) + "}"
+    val lines = Seq(head(Some(100L), Some(142L)), head(None, Some(142L)),
+      head(Some(100L), None), head(None, None))
+    val p = new ProcessBuilder("python3", "-c",
+      "import json, sys; sys.path.insert(0, 'tools'); " +
+        "from bench_history import steal_delta; " +
+        "[print(steal_delta(json.loads(l))) for l in sys.stdin if l.strip()]")
+      .redirectErrorStream(true).start()
+    p.getOutputStream.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    p.getOutputStream.close()
+    val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+    assert(p.waitFor() === 0, out)
+    assert(out.linesIterator.toSeq === Seq("42", "None", "None", "None"))
   }
 
   test("historyLine splices provenance ahead of the bench line's fields") {
