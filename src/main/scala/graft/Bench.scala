@@ -160,25 +160,8 @@ object Bench {
     val (dirArg, repeat) = parseArgs(args)
     val sfDir = dirArg.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    // parsed up front: the history line serializes cpus as a JSON number
-    // (bench_history.py compares loadavg against it), and garbage would
-    // otherwise surface as an opaque failure inside SparkSession.builder
-    val cpusRaw = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val cpus = cpusRaw.toIntOption.getOrElse(
-      sys.error(s"SPARK_GRAFT_CPUS must be an integer >= 1, got '$cpusRaw'"))
-    require(cpus >= 1, s"SPARK_GRAFT_CPUS must be >= 1, got $cpus")
-    // EngineConf.tuned applies nothing by default; it only forwards the
-    // SPARK_GRAFT_MIN_PARTITION_SIZE escape hatch (stage widths only).
-    // The session time zone is set here, as Verify sets it, so the timed
-    // plans are the verified plans whatever the launcher injects.
-    val spark = EngineConf.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = EngineConf.cpus
+    val spark = EngineConf.session("graft-bench", cpus)
     // Warm-up: touch every table (parquet footers into page cache) and
     // exercise the common plan shapes once, so the first timed query
     // doesn't absorb JVM/JIT/codegen startup.

@@ -18,8 +18,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * This guard closes the CLASS: it walks the optimized logical plan and
   * flags every broadcast-strategy join hint whose hinted side reads one of
   * the scale-with-data tables without a structural bound in between.
-  * Wired into both [[PlanAudit]] (per-query report) and BroadcastGuardSpec
-  * (CI regression gate over every SparkEntry query).
+  * Wired into both [[PlanAudit]] (per-query report; an unallowlisted
+  * finding fails its exit status) and BroadcastGuardSpec (CI regression
+  * gate over every SparkEntry query).
   *
   * Why the OPTIMIZED plan: `broadcast(df)` plants a `ResolvedHint` node,
   * but the optimizer's finish-analysis batch (EliminateResolvedHint) folds

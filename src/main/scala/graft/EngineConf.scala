@@ -2,30 +2,48 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine-level performance configuration shared by every runner main
-  * (Bench, Verify, Probe, PlanAudit). Nothing here changes what any query
-  * computes — only how wide its stages execute.
-  *
-  * By default this applies NOTHING: stock AQE coalescing is kept. An
-  * earlier r21 iteration lowered the session-wide AQE coalescing floor
-  * (`coalescePartitions.minPartitionSize`) to 16k so the CPU-dense
-  * tiny-byte dedup stages stayed wide — it worked for those, but a BYTE
-  * floor cannot tell CPU-dense shuffles from cheap ones (the events/
-  * orders shuffles are BIGGER in bytes yet trivial per byte), and the
-  * interleaved A/B campaign showed every untouched single-shuffle
-  * aggregate/window query paying 1.3–1.6x for its newly-widened final
-  * stages. The surgical replacement is [[Tables.spread]]'s EXPLICIT
-  * partition count (exempt from coalescing) at exactly the call sites
-  * that are CPU-dense; everything else keeps stock behavior.
-  *
-  * SPARK_GRAFT_MIN_PARTITION_SIZE remains honored when set, so a
-  * deployment can still move the floor without a rebuild.
+import graft.extensions.GraftExtensions
+
+/** The one session factory. Every main (Bench, Verify, Probe, PlanAudit)
+  * and the test session build their SparkSession here, so the audited,
+  * verified and timed sessions share one configuration. Nothing here
+  * changes what any query computes.
   */
 object EngineConf {
+
+  /** The conf every session shares: UTC session time (event-time queries
+    * bucket by the session clock, and the oracle compares in UTC), no UI,
+    * and the engine's kernels registered in SQL. */
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
-    sys.env.get("SPARK_GRAFT_MIN_PARTITION_SIZE") match {
-      case Some(v) =>
-        b.config("spark.sql.adaptive.coalescePartitions.minPartitionSize", v)
-      case None => b
-    }
+    b.config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
+
+  /** Worker count of every main: `SPARK_GRAFT_CPUS`, else the JVM's
+    * available processors. */
+  def cpus: Int = cpusFrom(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** Parsed up front: garbage would otherwise surface as an opaque
+    * failure inside the builder, and Bench's line carries the count as a
+    * JSON number. */
+  def cpusFrom(raw: Option[String]): Int = raw match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(v) =>
+      require(v.toIntOption.exists(_ >= 1),
+        s"SPARK_GRAFT_CPUS must be an integer >= 1, got '$v'")
+      v.toInt
+  }
+
+  /** `local[cpus]` with one shuffle partition per core, log level WARN.
+    * `getOrCreate` returns the JVM's existing session when there is one,
+    * so a second call is the same session. */
+  def session(app: String, cpus: Int = EngineConf.cpus): SparkSession = {
+    val s = tuned(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName(app)
+      .config("spark.sql.shuffle.partitions", cpus.toString))
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }

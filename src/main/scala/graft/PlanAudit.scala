@@ -1,70 +1,107 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, CartesianProductExec}
 
 /** Plan hygiene audit: prints, per query, the physical-plan features that
   * matter at scale — parquet filter pushdown, column-pruned read schemas,
-  * join strategies, whole-stage-codegen coverage. Run after changing any
-  * query; the point is to catch a plan regression (a lost pushdown, an
-  * accidental nested-loop join) before it costs 100x at cluster scale.
+  * exchanges, join strategies, whole-stage-codegen coverage — read from
+  * the nodes of the final AQE plan (query stages and subqueries
+  * included). Run after changing any query; the point is to catch a plan
+  * regression (a lost pushdown, an accidental nested-loop join) before it
+  * costs 100x at cluster scale.
+  *
+  * Exits 1 when any query's audit throws, plans a cartesian product or
+  * force-broadcasts a fact-derived side; the last line names those
+  * queries. `--explain outDir` also writes each audited query's formatted
+  * executed plan to `<outDir>/<query>.txt` (a before/after pair is two
+  * directories).
+  *
+  * Usage: runMain graft.PlanAudit [sfDir] [--explain outDir] [query...]
   */
-object PlanAudit {
+object PlanAudit extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = EngineConf.tuned(SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    val (explainDir, positional) = parseArgs(args.toList)
+    val sfDir = positional.headOption.getOrElse("/root/testdata/sf0.01")
+    val names = positional.drop(1).toSet
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    val audited = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => names.isEmpty || names(name) }
+    val spark = EngineConf.session("graft-plan-audit")
+    explainDir.foreach(d => Files.createDirectories(Paths.get(d)))
+    val offending = audited.filter { case (name, fn) =>
+      // header first, so the engine's log lines while the query runs sit
+      // under the query that caused them
+      println(s"== $name")
       // Per-query isolation: one broken query must not abort the audit of
       // everything sorting after it.
-      try { audit(spark, dir, name, fn) }
-      catch { case e: Throwable =>
-        println(s"== $name\n   !!! AUDIT FAILED: ${e.getMessage}")
-      }
-    }
+      val problems =
+        try audit(fn(spark, sfDir), name, explainDir)
+        catch { case e: Throwable => Seq(s"AUDIT FAILED: ${e.getMessage}") }
+      problems.foreach(p => println(s"   !!! $p"))
+      problems.nonEmpty
+    }.map(_._1)
     spark.stop()
+    if (offending.nonEmpty) {
+      println(s"PlanAudit: ${offending.size} of ${audited.size} queries offending: " +
+        offending.mkString(", "))
+      sys.exit(1)
+    }
+    println(s"PlanAudit: ${audited.size} queries audited, none offending")
   }
 
-  private def audit(spark: SparkSession, dir: String, name: String,
-                    fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
-      val df = fn(spark, dir)
-      // drive THIS query's own execution (count() would plan a different
-      // query) so AQE finalizes and codegen stages appear in the string
-      df.collect()
-      val plan = df.queryExecution.executedPlan.toString
-      val pushed = "PushedFilters: \\[[^\\]]+\\]".r
-        .findAllIn(plan).toSeq.distinct
-      val reads = "ReadSchema: [^\\n]+".r.findAllIn(plan).toSeq.distinct
-      val joins = Seq("BroadcastHashJoin", "SortMergeJoin",
-        "BroadcastNestedLoopJoin", "ShuffledHashJoin", "CartesianProduct")
-        .filter(plan.contains)
-      // codegen stages print as `*(n)` operator prefixes in plan strings
-      val codegen = "\\*\\(\\d+\\)".r.findAllIn(plan).toSeq.distinct.size
-      // shuffle count (AQE executed plans print one ShuffleQueryStage per
-      // materialized exchange; reused stages print as ReusedExchange /
-      // a repeated stage id and are not new shuffles)
-      val shuffles = plan.linesIterator.count(l =>
-        l.contains("Exchange") && !l.contains("ReusedExchange"))
-      println(s"== $name")
-      println(s"   shuffles: $shuffles")
-      pushed.foreach(p => println(s"   $p"))
-      reads.foreach(r => println(s"   ${r.take(120)}"))
-      if (joins.nonEmpty) println(s"   joins: ${joins.mkString(", ")}")
-      println(s"   codegen spans: $codegen")
-      if (plan.contains("CartesianProduct"))
-        println("   !!! CARTESIAN PRODUCT")
-      // Broadcast discipline (the q08/t45 class): forced broadcast of a
-      // fact/corpus-derived side. Allowlisted queries print their
-      // justification; anything else is a scale regression.
-      BroadcastGuard.forcedUnboundedBroadcasts(df).foreach { off =>
-        BroadcastGuard.allowlist.get(name) match {
-          case Some(why) => println(s"   broadcast allowlisted: $why")
-          case None      => println(s"   !!! FORCED BROADCAST: $off")
-        }
+  /** `[--explain outDir]` anywhere among the positionals; any other flag
+    * fails loudly. */
+  private def parseArgs(args: List[String], explain: Option[String] = None,
+                        positional: Vector[String] = Vector.empty)
+      : (Option[String], Vector[String]) = args match {
+    case "--explain" :: dir :: rest => parseArgs(rest, Some(dir), positional)
+    case "--explain" :: Nil => sys.error("--explain needs an output directory")
+    case flag :: _ if flag.startsWith("--") => sys.error(s"unknown flag '$flag'")
+    case arg :: rest => parseArgs(rest, explain, positional :+ arg)
+    case Nil => (explain, positional)
+  }
+
+  /** Prints one query's plan facts and returns its problems. */
+  private def audit(df: DataFrame, name: String,
+                    explainDir: Option[String]): Seq[String] = {
+    // drive THIS query's own execution (count() would plan a different
+    // query) so AQE finalizes the plan the walk reads
+    df.collect()
+    val qe = df.queryExecution
+    explainDir.foreach(d =>
+      Files.writeString(Paths.get(d, s"$name.txt"), qe.explainString(FormattedMode)))
+    // reused exchanges are leaves here, so they are not counted again
+    val nodes = collectWithSubqueries(qe.executedPlan) { case p => p }
+    val scans = nodes.collect { case s: FileSourceScanExec => s }
+    val joins = nodes.collect { case j: BaseJoinExec => j.nodeName }.distinct
+    println(s"   exchanges: ${nodes.count(_.isInstanceOf[ShuffleExchangeExec])} shuffle, " +
+      s"${nodes.count(_.isInstanceOf[BroadcastExchangeExec])} broadcast")
+    // the node's own record of its pushed filters (the translated list
+    // itself is protected); unabbreviated, unlike the plan string
+    scans.map(_.metadata("PushedFilters")).filter(_ != "[]").distinct
+      .foreach(f => println(s"   PushedFilters: $f"))
+    scans.map(_.requiredSchema.catalogString).distinct
+      .foreach(s => println(s"   ReadSchema: $s"))
+    if (joins.nonEmpty) println(s"   joins: ${joins.mkString(", ")}")
+    println(s"   codegen stages: ${nodes.count(_.isInstanceOf[WholeStageCodegenExec])}")
+    val cartesian =
+      if (nodes.exists(_.isInstanceOf[CartesianProductExec])) Seq("CARTESIAN PRODUCT")
+      else Nil
+    // Broadcast discipline (the q08/t45 class): forced broadcast of a
+    // fact/corpus-derived side. Allowlisted queries print their
+    // justification; anything else is a scale regression.
+    cartesian ++ BroadcastGuard.forcedUnboundedBroadcasts(df).flatMap { off =>
+      BroadcastGuard.allowlist.get(name) match {
+        case Some(why) => println(s"   broadcast allowlisted: $why"); None
+        case None      => Some(s"FORCED BROADCAST: $off")
       }
+    }
   }
 }

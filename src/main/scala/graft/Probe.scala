@@ -1,15 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Smoke-runner for the driver contract's `entry` (rows>0 check). */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = EngineConf.tuned(SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineConf.session("graft-probe")
     val df = SparkEntry.entry(spark)
     println(s"ENTRY rows=${df.count()}")
     df.show(5, false)

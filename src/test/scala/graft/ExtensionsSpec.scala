@@ -1,36 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-import graft.extensions.GraftExtensions
 import graft.expressions.QCosine
 import graft.functions.Similarity._
 
-/** SQL-surface registration via SparkSessionExtensions (own session —
-  * extensions bind at session construction). */
-class ExtensionsSpec extends AnyFunSuite {
-
-  // getOrCreate returns any already-active session (extensions would be
-  // silently ignored when other suites ran first in this JVM) — clear the
-  // active/default handles so a NEW session is built on the shared
-  // SparkContext with the extensions applied.
-  private lazy val spark: SparkSession = {
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-extensions-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    // restore the shared session as default for suites that run after us
-    prior.foreach(SparkSession.setDefaultSession)
-    s
-  }
+/** SQL-surface registration via SparkSessionExtensions: the factory
+  * ([[EngineConf.tuned]]) registers them on every session. */
+class ExtensionsSpec extends SparkSpec {
 
   test("qcosine is callable from SQL and matches the Column API") {
     import spark.implicits._

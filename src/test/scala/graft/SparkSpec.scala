@@ -6,17 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one JVM-wide session — Spark
   * startup dominates test wall-clock otherwise). */
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** `local[4]`: specs assert partition counts at that width. */
+  lazy val session: SparkSession = EngineConf.session("graft-test", cpus = 4)
 }
 
 trait SparkSpec extends AnyFunSuite {
