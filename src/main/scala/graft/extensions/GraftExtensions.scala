@@ -10,9 +10,9 @@ import graft.expressions.{MaxPairMultiplicity, MaxRun, Md5Prefix60, MinHashSig, 
   * SQL function registry, so `spark.sql("... qcosine(a, b) ...")` and the
   * Column API hit the same codegen'd kernel.
   *
-  * Enable with
-  * `.config("spark.sql.extensions", "graft.extensions.GraftExtensions")`
-  * or `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * [[graft.EngineConf.tuned]] registers it on every session the engine
+  * builds; another launcher can use
+  * `.config("spark.sql.extensions", "graft.extensions.GraftExtensions")`.
   *
   * Per SURVEY.md §7.3 this is the whole custom-Catalyst surface the
   * engine needs: the reference's operator inventory is covered by stock
